@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from citation_graph_spark.edges import cap_out_degree
 from citation_graph_spark.operators.superstep import SuperstepContext
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.sources.checkpoint import CheckpointManager, id_fingerprint
 
 
 @dataclass
@@ -56,10 +56,9 @@ def bfs_expand(
     reference's exclude-papers file (``paper.py:181-201``).
 
     With ``checkpoint_dir`` set, a killed run resumes from the newest valid
-    manifest whose recorded root/max_per_src match this call (``max_depth``
-    is a continuation knob: resuming with a larger depth keeps expanding).
-    ``exclude`` is a DataFrame and is NOT validated against the manifest —
-    callers resuming with a different exclude list must start fresh.
+    manifest whose recorded root/max_per_src/exclude set match this call
+    (``max_depth`` is a continuation knob: resuming with a larger depth
+    keeps expanding).
     """
     spark = edges.sparkSession
     if num_partitions is None:
@@ -75,9 +74,29 @@ def bfs_expand(
                 "root": str(root),
                 "max_depth": max_depth,
                 "max_per_src": max_per_src,
+                **(
+                    {"exclude_fp": id_fingerprint(exclude)}
+                    if exclude is not None
+                    else {}
+                ),
             },
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
+
+    # nothing left to expand: the frontier died, or the resumed state
+    # already covers the requested depth
+    resumed = (
+        ctx.resume(
+            lambda it, m: m.get("new_vertices") == 0 or it >= max_depth,
+            ignore=("max_depth",),
+        )
+        if resume
+        else None
+    )
+    if resumed is not None and resumed.done:
+        visited = resumed.state.where(F.col("depth") <= max_depth)
+        reached = visited.agg(F.max("depth")).first()[0] or 0
+        return BFSResult(visited, int(reached), [])
 
     adj = edges
     if max_per_src is not None:
@@ -87,44 +106,15 @@ def bfs_expand(
     adj = adj.select("src", "dst").repartition(num_partitions, "src").persist()
     adj.count()
 
-    start_level = 0
-    visited = None
-    if ckpt is not None and resume:
-        from citation_graph_spark.sources.checkpoint import resume_compatible
-
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            if resume_compatible(
-                manifest.get("args"), ckpt.args, ignore=("max_depth",)
-            ):
-                visited = state_df
-                start_level = it
-                exhausted = manifest["metrics"].get("new_vertices") == 0
-                if exhausted or it >= max_depth:
-                    # Nothing left to expand (frontier died, or the resumed
-                    # state already covers the requested depth).
-                    adj.unpersist()
-                    visited = visited.where(F.col("depth") <= max_depth)
-                    reached = visited.agg(F.max("depth")).first()[0] or 0
-                    return BFSResult(visited, int(reached), [])
-            else:
-                import warnings
-
-                warnings.warn(
-                    f"checkpoint at {checkpoint_dir} was written with different "
-                    f"args ({manifest.get('args')}) than this call ({ckpt.args}); "
-                    "ignoring it and starting fresh",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-
-    if visited is None:
+    if resumed is None:
         id_type = dict(edges.dtypes)["src"]
         visited = spark.createDataFrame(
             [(root, 0, None)], f"id {id_type}, depth int, parent {id_type}"
         )
         visited = ctx.truncate(visited, 0)
+        start_level = 0
+    else:
+        visited, start_level = resumed.state, resumed.iteration
     frontier = visited.where(F.col("depth") == start_level).select("id")
 
     depth_reached = start_level
@@ -149,14 +139,13 @@ def bfs_expand(
         depth_reached = depth + 1
         frontier = visited.where(F.col("depth") == depth + 1).select("id")
 
-    if ckpt is not None:
-        # carry new_vertices into the final manifest: save()'s prune deletes
-        # the level that recorded new_vertices=0, so without this a resume
-        # of an exhausted run could not detect the dead frontier and would
-        # re-execute one wasted empty superstep
-        visited = ctx.finish(
-            visited, depth_reached, {"final": True, "new_vertices": n_new}
-        )
+    # carry new_vertices into the final manifest: save()'s prune deletes
+    # the level that recorded new_vertices=0, so without this a resume
+    # of an exhausted run could not detect the dead frontier and would
+    # re-execute one wasted empty superstep
+    visited = ctx.finish(
+        visited, depth_reached, {"final": True, "new_vertices": n_new}
+    )
     adj.unpersist()
     return BFSResult(visited, depth_reached, ctx.history)
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from citation_graph_spark.edges import symmetrize, vertices_of
 from citation_graph_spark.operators.prepared import PreparedGraph
 from citation_graph_spark.operators.superstep import SuperstepContext
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.sources.checkpoint import CheckpointManager, hash_sum
 
 
 @dataclass
@@ -103,26 +103,18 @@ def _hash_min(
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
 
-    start_iter = 1
-    state = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                if manifest["metrics"].get("changed") == 0:
-                    return ComponentsResult(state_df.select("id", "label"), it, True, [])
-                state = state_df
-                start_iter = it + 1
+    resumed = ctx.resume(lambda it, m: m.get("changed") == 0) if resume else None
+    if resumed is not None and resumed.done:
+        return ComponentsResult(
+            resumed.state.select("id", "label"), resumed.iteration, True, []
+        )
 
     # CSR-style layout (see pagerank.py): cache-sorted on src so each
     # superstep's merge join re-sorts only the label frame. Shared with LPA
     # via PreparedGraph when the caller passed one.
     sym = prepared.symmetrized()
 
-    if state is None:
+    if resumed is None:
         # vertex set from the PreparedGraph's cached flag table (one
         # aggregation, shared with pagerank/lpa and prebuilt by callers
         # that pass a prepared graph) instead of a private
@@ -132,13 +124,13 @@ def _hash_min(
         )
         state = ctx.truncate(state, 0)
         ctx.record(state, 0, {"changed": None})
-
-    import time as _time
+        start_iter = 1
+    else:
+        state, start_iter = resumed.state, resumed.iteration + 1
 
     changed = -1
     it = start_iter - 1
     for it in range(start_iter, max_iter + 1):
-        _t_iter = _time.time()
         nbr_min = (
             state.join(sym.hint("merge"), state.id == sym.src)
             .groupBy(sym.dst.alias("id"))
@@ -155,17 +147,12 @@ def _hash_min(
         new_state = ctx.truncate(new_state, it)
         changed = new_state.where("_changed").count()
         state = new_state.drop("_changed")
-        state = ctx.record(
-            state,
-            it,
-            {"changed": changed, "seconds": round(_time.time() - _t_iter, 3)},
-        )
+        state = ctx.record(state, it, {"changed": changed})
         if changed == 0:
             break
 
     converged = changed == 0
-    if ckpt is not None:
-        state = ctx.finish(state, it, {"changed": changed, "final": converged})
+    state = ctx.finish(state, it, {"changed": changed, "final": converged})
     return ComponentsResult(state.select("id", "label"), it, converged, ctx.history)
 
 
@@ -232,34 +219,25 @@ def _two_star(
         verts.unpersist()
         return ComponentsResult(result, it, converged, ctx.history)
 
-    start_iter = 1
-    state = None
+    resumed = ctx.resume(lambda it, m: bool(m.get("converged"))) if resume else None
+    if resumed is not None and resumed.done:
+        return finish_labels(resumed.state, resumed.iteration, True)
+
     prev_sum = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                metrics = manifest["metrics"]
-                if metrics.get("converged"):
-                    return finish_labels(state_df, it, True)
-                state = state_df
-                if metrics.get("checksum") is not None:
-                    prev_sum = (
-                        metrics["pointers"],
-                        decimal.Decimal(metrics["checksum"]),
-                    )
-                start_iter = it + 1
-
-    # initial pointers: undirected neighbour pairs, both directions —
-    # reuse the PreparedGraph's persisted symmetrized view when available
-    fresh_start = state is None
-    if state is None:
+    if resumed is None:
+        # initial pointers: undirected neighbour pairs, both directions —
+        # reuse the PreparedGraph's persisted symmetrized view when available
         sym0 = prepared.symmetrized() if prepared is not None else symmetrize(edges)
         pairs = sym0.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         state = ctx.truncate(pairs.repartition(num_partitions, "u"), 0)
+        start_iter = 1
+    else:
+        state, start_iter = resumed.state, resumed.iteration + 1
+        if resumed.metrics.get("checksum") is not None:
+            prev_sum = (
+                resumed.metrics["pointers"],
+                decimal.Decimal(resumed.metrics["checksum"]),
+            )
 
     def large_star(p: DataFrame) -> DataFrame:
         # Γ(u) is the SYMMETRIC neighbourhood (each edge contributes both
@@ -292,29 +270,21 @@ def _two_star(
         return hang_nbrs.unionByName(hang_self).distinct()
 
     def checksum(p: DataFrame):
-        row = p.agg(
-            F.count("*").alias("n"),
-            # decimal sum: long would overflow under ANSI mode; coalesce so
-            # an empty pointer set checksums to 0, not NULL (manifest JSON)
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).first()
+        row = p.agg(F.count("*").alias("n"), hash_sum("u", "v").alias("h")).first()
         return (row["n"], row["h"])
 
     if prev_sum is None:
         # fresh run, or a compatible resume whose manifest predates the
         # checksum metric: recompute the fixpoint baseline from the state.
         prev_sum = checksum(state)
-        if fresh_start:
+        if resumed is None:
             # iteration-0 manifest carries the initial checksum so a run
             # killed before its first durable round still resumes with a
             # fixpoint test. Recorded ONLY on a genuine fresh start: on a
             # checksum-less resume this would durably relabel iteration-k
             # state as iteration 0 and CheckpointManager.save would then
             # prune every iteration > 0 — deleting the checkpoint just
-            # loaded (ADVICE r04; _hash_min guards with `state is None`).
+            # loaded (ADVICE r04).
             state = ctx.record(
                 state,
                 0,
@@ -345,15 +315,14 @@ def _two_star(
             break
         prev_sum = cur_sum
 
-    if ckpt is not None:
-        state = ctx.finish(
-            state,
-            it,
-            {
-                "pointers": last_sum[0],
-                "checksum": str(last_sum[1]),
-                "converged": converged,
-                "final": converged,
-            },
-        )
+    state = ctx.finish(
+        state,
+        it,
+        {
+            "pointers": last_sum[0],
+            "checksum": str(last_sum[1]),
+            "converged": converged,
+            "final": converged,
+        },
+    )
     return finish_labels(state, it, converged)

@@ -36,7 +36,6 @@ Scale shape per superstep (what runs on 1000 executors):
 
 from __future__ import annotations
 
-import time as _time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -84,29 +83,19 @@ def hits(
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
 
-    start_iter = 1
-    state = None
-    resumed_delta = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                prev_delta = manifest["metrics"].get("delta")
-                if prev_delta is not None and float(prev_delta) < tol:
-                    return HITSResult(
-                        state_df.select("id", "auth", "hub"),
-                        it,
-                        float(prev_delta),
-                        True,
-                        [],
-                    )
-                state = state_df
-                start_iter = it + 1
-                if prev_delta is not None:
-                    resumed_delta = float(prev_delta)
+    resumed = (
+        ctx.resume(lambda it, m: m.get("delta") is not None and m["delta"] < tol)
+        if resume
+        else None
+    )
+    if resumed is not None and resumed.done:
+        return HITSResult(
+            resumed.state.select("id", "auth", "hub"),
+            resumed.iteration,
+            float(resumed.metrics["delta"]),
+            True,
+            [],
+        )
 
     # --- static per-run tables: the same edge rows cached in BOTH join
     # layouts (src-sorted for the authority step, dst-sorted for the hub
@@ -134,7 +123,7 @@ def hits(
             )
             return HITSResult(empty, 0, 0.0, True, [])
 
-        if state is None:
+        if resumed is None:
             state = vertices_of(edges).select(
                 "id",
                 F.lit(0.0).alias("auth"),
@@ -142,11 +131,14 @@ def hits(
             )
             state = ctx.truncate(state, 0)
             state = ctx.record(state, 0, {"delta": None})
+            start_iter, delta = 1, float("inf")
+        else:
+            state, start_iter = resumed.state, resumed.iteration + 1
+            recorded = resumed.metrics.get("delta")
+            delta = float("inf") if recorded is None else float(recorded)
 
-        delta = float("inf") if resumed_delta is None else resumed_delta
         it = start_iter - 1
         for it in range(start_iter, max_iter + 1):
-            _t_iter = _time.time()
             # authority step: push hub scores along out-edges
             a_raw = (
                 state.join(by_src.hint("merge"), state.id == F.col("a_src"))
@@ -207,17 +199,12 @@ def hits(
                 new_state.agg(F.sum("_delta")).first()[0] or 0.0
             )
             state = new_state.drop("_delta")
-            state = ctx.record(
-                state,
-                it,
-                {"delta": delta, "seconds": round(_time.time() - _t_iter, 3)},
-            )
+            state = ctx.record(state, it, {"delta": delta})
             if delta < tol:
                 break
 
         converged = delta < tol
-        if ckpt is not None:
-            state = ctx.finish(state, it, {"delta": delta, "final": converged})
+        state = ctx.finish(state, it, {"delta": delta, "final": converged})
         return HITSResult(
             state.select("id", "auth", "hub"), it, delta, converged, ctx.history
         )

@@ -35,7 +35,6 @@ machinery for the states that need it (sources/checkpoint.py).
 
 from __future__ import annotations
 
-import time as _time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -83,7 +82,6 @@ def k_core(
     it = 0
     converged = prev_ne == 0
     for it in range(1, (max_iter if not converged else 0) + 1):
-        _t_iter = _time.time()
         deg = state.groupBy("src").agg(F.count("*").alias("degree"))
         survivors = deg.where(F.col("degree") >= k).select(
             F.col("src").alias("id")
@@ -94,13 +92,7 @@ def k_core(
         new_state = ctx.truncate(new_state, it)
         ne = new_state.count()  # materializes the truncated state
         state = ctx.record(
-            new_state,
-            it,
-            {
-                "edges": ne,
-                "dropped_edges": prev_ne - ne,
-                "seconds": round(_time.time() - _t_iter, 3),
-            },
+            new_state, it, {"edges": ne, "dropped_edges": prev_ne - ne}
         )
         done = ne == prev_ne or ne == 0
         prev_ne = ne

@@ -78,36 +78,26 @@ def _lpa_loop(
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
 
-    start_iter = 1
-    state = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                if manifest["metrics"].get("changed") == 0:
-                    return LPAResult(state_df.select("id", "label"), it, True, [])
-                state = state_df
-                start_iter = it + 1
+    resumed = ctx.resume(lambda it, m: m.get("changed") == 0) if resume else None
+    if resumed is not None and resumed.done:
+        return LPAResult(resumed.state.select("id", "label"), resumed.iteration, True, [])
 
     sym = prepared.symmetrized()
 
-    if state is None:
+    if resumed is None:
         # vertex set from the PreparedGraph's cached flag table (r06; see
         # components.py — one shared aggregation instead of a private
         # union-distinct over the edge table)
         state = prepared.dangling_flagged().select("id", F.col("id").alias("label"))
         state = ctx.truncate(state, 0)
         ctx.record(state, 0, {"changed": None})
-
-    import time as _time
+        start_iter = 1
+    else:
+        state, start_iter = resumed.state, resumed.iteration + 1
 
     changed = -1
     it = start_iter - 1
     for it in range(start_iter, max_iter + 1):
-        _t_iter = _time.time()
         # Count neighbour labels per vertex, then a type-agnostic argmax:
         # max count first, smallest label on ties. Two hash aggs (both with
         # map-side partials), no window sort, works for long AND string ids.
@@ -134,15 +124,10 @@ def _lpa_loop(
         new_state = ctx.truncate(new_state, it)
         changed = new_state.where("_changed").count()
         state = new_state.drop("_changed")
-        state = ctx.record(
-            state,
-            it,
-            {"changed": changed, "seconds": round(_time.time() - _t_iter, 3)},
-        )
+        state = ctx.record(state, it, {"changed": changed})
         if changed == 0:
             break
 
     converged = changed == 0
-    if ckpt is not None:
-        state = ctx.finish(state, it, {"changed": changed, "final": converged})
+    state = ctx.finish(state, it, {"changed": changed, "final": converged})
     return LPAResult(state.select("id", "label"), it, converged, ctx.history)

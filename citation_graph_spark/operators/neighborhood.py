@@ -130,8 +130,6 @@ def hyperanf(
     state.count()
     ctx.record(state, 0)
 
-    import time as _time
-
     # d=0 snapshot: |B(v,0)| estimated with the SAME estimator as every
     # other radius, so downstream telescoping sums (harmonic centrality)
     # difference like-with-like (HyperANF §3: centralities use the
@@ -144,7 +142,6 @@ def hyperanf(
     history: list[dict[str, Any]] = []
     try:
         for d in range(1, max_d + 1):
-            _t_iter = _time.time()
             nbr = (
                 state.join(e.hint("merge"), state.id == e.dst)
                 .groupBy(e.src.alias("id"))
@@ -164,9 +161,7 @@ def hyperanf(
             snapshot = snapshot.localCheckpoint(eager=True)  # outlives ctx
             per_d.append(snapshot)
             ctx.record(state, d)
-            history.append(
-                {"d": d, "seconds": round(_time.time() - _t_iter, 3)}
-            )
+            history.append({"d": d, "seconds": ctx.history[-1]["seconds"]})
 
         union = reduce(DataFrame.union, per_d)
         # driver-side estimate: one small agg per d (Σ 2^(rho/k) over v)

@@ -27,18 +27,22 @@ Scale shape per iteration (what runs on 1000 executors):
   Parquet checkpoints + manifest every ``durable_every`` iterations; a
   killed run resumes from the newest valid manifest (metrics carry the
   dangling mass, so resume is exact).
+
+:func:`personalized_pagerank` runs on the same loop (``_power_iteration``);
+the two differ only in the restart term — uniform ``(1-a)/n + a*dm/n`` here,
+the source vector there.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from citation_graph_spark.operators.prepared import PreparedGraph, superstep_contribs
 from citation_graph_spark.operators.superstep import SuperstepContext
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.sources.checkpoint import CheckpointManager, id_fingerprint
 
 
 @dataclass
@@ -64,6 +68,11 @@ def pagerank(
     weight_col: str | None = None,
 ) -> PageRankResult:
     """Run PageRank on an ``(src, dst, ...)`` edge DataFrame.
+
+    The loop (``_power_iteration``, shared with
+    :func:`personalized_pagerank`) carries ``(id, rank, is_dangling)`` and
+    adds the uniform restart ``(1-a)/n + a*dm/n`` to every vertex; resume,
+    truncation, timing and checkpoints follow ``SuperstepContext``.
 
     ``weight_col``: optional strictly-positive edge-weight column —
     contributions become r(u)·weight(u,v)/Σ_w(u) instead of
@@ -119,10 +128,17 @@ def pagerank(
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
 
+    def uniform(flagged: DataFrame) -> _Restart:
+        n = prepared.n_vertices()
+        return _Restart(
+            flagged,
+            F.lit(1.0 / n),
+            lambda state, dm: F.lit((1.0 - alpha) / n + alpha * dm / n),
+        )
+
     try:
-        return _pagerank_loop(
-            prepared, ctx, ckpt, alpha, tol, max_iter, salt_factor, resume,
-            checkpoint_dir,
+        return _power_iteration(
+            prepared, ctx, alpha, tol, max_iter, salt_factor, resume, uniform
         )
     finally:
         if owns_prepared:
@@ -153,15 +169,16 @@ def personalized_pagerank(
 
     with ``p`` uniform over ``sources ∩ vertices`` (ns of them, p(v) =
     1/ns), r0 = p, dangling mass restarting at the sources, and the same
-    L1-delta stopping rule as :func:`pagerank`. The superstep is the
-    IDENTICAL plan shape (shared ``superstep_contribs``: merge-hinted SMJ
-    vs the persisted src-sorted edge cache, map-side partial aggregation,
-    one scalar action per iteration); only the per-vertex restart term
-    differs, a branchless CASE over a broadcast-joined source flag.
+    L1-delta stopping rule as :func:`pagerank`. It runs on
+    :func:`pagerank`'s loop (same superstep plan, checkpointing and
+    resume); only the restart term differs, a branchless CASE over a
+    source flag broadcast-joined once into the state.
 
     ``sources``: DataFrame with an ``id`` column (kept declarative —
     typically tiny vs the graph, so the flag join broadcasts). Ids not in
-    the graph are ignored; ns counts only matched sources.
+    the graph are ignored; ns counts only matched sources. The manifest
+    records a fingerprint of the distinct source ids, so resuming with
+    another source set warns and starts fresh.
     ``salt_factor`` is the explicit integer knob (no "auto" here — the
     measured A/B would re-time what the pagerank study already settled
     for the shared superstep body)."""
@@ -178,12 +195,6 @@ def personalized_pagerank(
 
     ckpt = None
     if checkpoint_dir is not None:
-        # fingerprint the source set into the manifest args so a resume
-        # against a checkpoint written for a DIFFERENT seed set is rejected
-        # by the args-compat check (order-independent sum of id hashes)
-        src_fp = sources.select(
-            F.sum(F.xxhash64(F.col("id").cast("string"))).alias("fp")
-        ).first()["fp"]
         ckpt = CheckpointManager(
             spark,
             checkpoint_dir,
@@ -193,145 +204,40 @@ def personalized_pagerank(
                 "tol": tol,
                 "max_iter": max_iter,
                 "salt_factor": salt_factor,
-                "sources_fp": src_fp,
+                "sources_fp": id_fingerprint(sources),
             },
         )
     ctx = SuperstepContext(checkpoint=ckpt, durable_every=durable_every)
+
+    def to_sources(flagged: DataFrame) -> _Restart:
+        # the seed set is small by construction: broadcast the flag join
+        vertices = flagged.join(
+            F.broadcast(
+                sources.select("id").distinct().withColumn("is_source", F.lit(True))
+            ),
+            "id",
+            "left",
+        ).select(
+            "id", "is_dangling", F.coalesce("is_source", F.lit(False)).alias("is_source")
+        )
+        ns = vertices.where("is_source").count()
+        if ns == 0:
+            raise ValueError("no source id matches a graph vertex")
+        return _Restart(
+            vertices,
+            F.when(F.col("is_source"), F.lit(1.0 / ns)).otherwise(0.0),
+            lambda state, dm: F.when(
+                state.is_source, F.lit(((1.0 - alpha) + alpha * dm) / ns)
+            ).otherwise(0.0),
+        )
+
     try:
-        return _ppr_loop(
-            prepared, ctx, ckpt, sources, alpha, tol, max_iter, salt_factor,
-            resume, checkpoint_dir,
+        return _power_iteration(
+            prepared, ctx, alpha, tol, max_iter, salt_factor, resume, to_sources
         )
     finally:
         if owns_prepared:
             prepared.unpersist()
-
-
-def _ppr_loop(
-    prepared: PreparedGraph,
-    ctx: SuperstepContext,
-    ckpt,
-    sources: DataFrame,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    salt_factor: int,
-    resume: bool,
-    checkpoint_dir,
-) -> PageRankResult:
-    import time as _time
-
-    start_iter = 0
-    dangling_mass = None
-    state = None
-    resumed_delta = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                state = state_df
-                start_iter = it + 1
-                dangling_mass = float(manifest["metrics"]["dangling_mass"])
-                prev_delta = manifest["metrics"].get("delta")
-                if prev_delta is not None:
-                    resumed_delta = float(prev_delta)
-                    if resumed_delta < tol:
-                        return PageRankResult(
-                            state.select("id", "rank"), it, resumed_delta, True, []
-                        )
-
-    w_edges = prepared.weighted_edges(salt_factor)
-    flagged = prepared.dangling_flagged()
-    if prepared.n_vertices() == 0:
-        empty = flagged.select(F.col("id"), F.lit(0.0).alias("rank"))
-        return PageRankResult(empty, 0, 0.0, True, [])
-
-    # source flag joined once into the static vertex table (broadcast: the
-    # seed set is small by construction), then carried through the state
-    src_flagged = flagged.join(
-        F.broadcast(sources.select(F.col("id")).distinct().withColumn(
-            "is_source", F.lit(True)
-        )),
-        "id",
-        "left",
-    ).select(
-        "id", "is_dangling", F.coalesce("is_source", F.lit(False)).alias("is_source")
-    )
-    ns = src_flagged.where("is_source").count()
-    if ns == 0:
-        raise ValueError("no source id matches a graph vertex")
-
-    if state is None:
-        state = src_flagged.select(
-            "id",
-            F.when(F.col("is_source"), F.lit(1.0 / ns)).otherwise(0.0).alias("rank"),
-            "is_dangling",
-            "is_source",
-        )
-        state = ctx.truncate(state, 0)
-        dangling_mass = (
-            state.where("is_dangling").agg(F.sum("rank")).first()[0] or 0.0
-        )
-        state = ctx.record(state, 0, {"dangling_mass": dangling_mass, "delta": None})
-        start_iter = 1
-
-    delta = float("inf") if resumed_delta is None else resumed_delta
-    ran = False
-    it = start_iter - 1
-    for it in range(start_iter, max_iter + 1):
-        ran = True
-        _t_iter = _time.time()
-        contribs = superstep_contribs(state, w_edges, salt_factor)
-        restart = (1.0 - alpha) + alpha * dangling_mass  # total mass restarting
-        new_state = (
-            state.join(contribs.hint("merge"), state.id == contribs.dst, "left")
-            .select(
-                state.id.alias("id"),
-                (
-                    F.when(state.is_source, F.lit(restart / ns)).otherwise(0.0)
-                    + F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
-                ).alias("new_rank"),
-                state.rank.alias("old_rank"),
-                state.is_dangling.alias("is_dangling"),
-                state.is_source.alias("is_source"),
-            )
-            .select(
-                "id",
-                F.col("new_rank").alias("rank"),
-                "is_dangling",
-                "is_source",
-                F.abs(F.col("new_rank") - F.col("old_rank")).alias("_delta"),
-            )
-        )
-        new_state = ctx.truncate(new_state, it)
-        row = new_state.agg(
-            F.sum("_delta").alias("delta"),
-            F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("dm"),
-        ).first()
-        delta = float(row["delta"] or 0.0)
-        dangling_mass = float(row["dm"] or 0.0)
-        state = new_state.drop("_delta")
-        state = ctx.record(
-            state,
-            it,
-            {
-                "dangling_mass": dangling_mass,
-                "delta": delta,
-                "seconds": round(_time.time() - _t_iter, 3),
-            },
-        )
-        if delta < tol:
-            break
-
-    converged = delta < tol
-    if ckpt is not None and ran:
-        state = ctx.finish(
-            state, it, {"dangling_mass": dangling_mass, "delta": delta, "final": converged}
-        )
-    return PageRankResult(state.select("id", "rank"), it, delta, converged, ctx.history)
 
 
 def _resolve_auto_salt(
@@ -361,107 +267,91 @@ def _resolve_auto_salt(
     return prepared.resolve_salt_factor()
 
 
-def _pagerank_loop(
+class _Restart(NamedTuple):
+    """What distinguishes PageRank from PPR: the vertex table the state is
+    built from (``id``, ``is_dangling`` and any flag the restart term
+    reads), the initial rank, and the per-vertex restart term as a
+    function of the state and the current dangling mass."""
+
+    vertices: DataFrame
+    initial_rank: Column
+    term: Callable[[DataFrame, float], Column]
+
+
+def _power_iteration(
     prepared: PreparedGraph,
     ctx: SuperstepContext,
-    ckpt,
     alpha: float,
     tol: float,
     max_iter: int,
     salt_factor: int,
     resume: bool,
-    checkpoint_dir,
+    restart: Callable[[DataFrame], _Restart],
 ) -> PageRankResult:
-    # --- resume check first: a fully-converged checkpoint returns before
-    # any static table is built -----------------------------------------------
-    start_iter = 0
-    dangling_mass = None
-    state = None
-    resumed_delta = None
-    if ckpt is not None and resume:
-        latest = ckpt.latest()
-        if latest is not None:
-            it, state_df, manifest = latest
-            # Validate ALL recorded hyperparameters (alpha, salt_factor, …),
-            # not just the algorithm name — resuming a checkpoint written
-            # under different parameters would blend two different fixpoints.
-            # max_iter/tol are continuation knobs and may differ.
-            from citation_graph_spark.sources.checkpoint import resume_compatible
-
-            if resume_compatible(manifest.get("args"), ckpt.args):
-                state = state_df
-                start_iter = it + 1
-                dangling_mass = float(manifest["metrics"]["dangling_mass"])
-                prev_delta = manifest["metrics"].get("delta")
-                if prev_delta is not None:
-                    # seed the residual: if the loop below runs zero
-                    # iterations (start_iter > max_iter), the true recorded
-                    # delta is reported instead of inf, and the manifest is
-                    # not rewritten (see the `ran` guard at the bottom)
-                    resumed_delta = float(prev_delta)
-                    if resumed_delta < tol:
-                        # Already converged — nothing to recompute.
-                        return PageRankResult(
-                            state.select("id", "rank"), it, resumed_delta, True, []
-                        )
-            else:
-                import warnings
-
-                warnings.warn(
-                    f"checkpoint at {checkpoint_dir} was written with different "
-                    f"args ({manifest.get('args')}) than this call ({ckpt.args}); "
-                    "ignoring it and starting fresh",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
+    """The loop :func:`pagerank` and :func:`personalized_pagerank` share:
+    r'(v) = restart(v) + alpha * Σ_{u→v} r(u)·w(u,v)."""
+    # a converged checkpoint returns before any static table is built
+    resumed = (
+        ctx.resume(lambda it, m: m.get("delta") is not None and m["delta"] < tol)
+        if resume
+        else None
+    )
+    if resumed is not None and resumed.done:
+        return PageRankResult(
+            resumed.state.select("id", "rank"),
+            resumed.iteration,
+            float(resumed.metrics["delta"]),
+            True,
+            [],
+        )
 
     # --- static per-run tables (PreparedGraph: built once, persisted,
     # shared across algorithm calls when the caller passed one) --------------
     w_edges = prepared.weighted_edges(salt_factor)
-    n = prepared.n_vertices()
-    if n == 0:
-        empty = prepared.dangling_flagged().select(F.col("id"), F.lit(0.0).alias("rank"))
-        return PageRankResult(empty, 0, 0.0, True, [])
     flagged = prepared.dangling_flagged()
+    if prepared.n_vertices() == 0:
+        empty = flagged.select(F.col("id"), F.lit(0.0).alias("rank"))
+        return PageRankResult(empty, 0, 0.0, True, [])
+    vertices, initial_rank, restart_term = restart(flagged)
+    carried = [c for c in vertices.columns if c != "id"]
 
-    if state is None:
-        state = flagged.select(
-            "id", F.lit(1.0 / n).alias("rank"), "is_dangling"
-        )
+    if resumed is None:
+        state = vertices.select("id", initial_rank.alias("rank"), *carried)
         state = ctx.truncate(state, 0)
         dangling_mass = (
             state.where("is_dangling").agg(F.sum("rank")).first()[0] or 0.0
         )
         state = ctx.record(state, 0, {"dangling_mass": dangling_mass, "delta": None})
-        start_iter = 1
+        start_iter, delta = 1, float("inf")
+    else:
+        # the metrics carry the dangling mass, so the resume is exact; a
+        # resume with no step left reports the recorded residual, not inf
+        state = resumed.state
+        start_iter = resumed.iteration + 1
+        dangling_mass = float(resumed.metrics["dangling_mass"])
+        recorded = resumed.metrics.get("delta")
+        delta = float("inf") if recorded is None else float(recorded)
 
-    import time as _time
-
-    delta = float("inf") if resumed_delta is None else resumed_delta
-    ran = False
     it = start_iter - 1
     for it in range(start_iter, max_iter + 1):
-        ran = True
-        _t_iter = _time.time()
         # the join-agg superstep body lives in prepared.superstep_contribs —
         # shared with the measured salt A/B so the probe times this exact plan
         contribs = superstep_contribs(state, w_edges, salt_factor)
-
-        base = (1.0 - alpha) / n + alpha * dangling_mass / n
         new_state = (
             state.join(contribs.hint("merge"), state.id == contribs.dst, "left")
             .select(
                 state.id.alias("id"),
-                (F.lit(base) + F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))).alias(
-                    "new_rank"
-                ),
+                (
+                    restart_term(state, dangling_mass)
+                    + F.lit(alpha) * F.coalesce("contrib", F.lit(0.0))
+                ).alias("new_rank"),
                 state.rank.alias("old_rank"),
-                state.is_dangling.alias("is_dangling"),
+                *[state[c].alias(c) for c in carried],
             )
             .select(
                 "id",
                 F.col("new_rank").alias("rank"),
-                "is_dangling",
+                *carried,
                 F.abs(F.col("new_rank") - F.col("old_rank")).alias("_delta"),
             )
         )
@@ -472,26 +362,18 @@ def _pagerank_loop(
         ).first()
         delta = float(row["delta"] or 0.0)
         dangling_mass = float(row["dm"] or 0.0)
-        state = new_state.drop("_delta")
         state = ctx.record(
-            state,
+            new_state.drop("_delta"),
             it,
-            {
-                "dangling_mass": dangling_mass,
-                "delta": delta,
-                "seconds": round(_time.time() - _t_iter, 3),
-            },
+            {"dangling_mass": dangling_mass, "delta": delta},
         )
         if delta < tol:
             break
 
     converged = delta < tol
-    if ckpt is not None and ran:
-        # Durably record the last state (full schema, so resume still works)
-        # even when it fell between durable_every boundaries. Skipped when
-        # zero iterations ran — rewriting the manifest would clobber the
-        # recorded true residual (and delta=inf is not valid JSON).
-        state = ctx.finish(
-            state, it, {"dangling_mass": dangling_mass, "delta": delta, "final": converged}
-        )
+    # the last state with its full schema (so a resume works) even when it
+    # fell between durable_every boundaries
+    state = ctx.finish(
+        state, it, {"dangling_mass": dangling_mass, "delta": delta, "final": converged}
+    )
     return PageRankResult(state.select("id", "rank"), it, delta, converged, ctx.history)

@@ -153,10 +153,7 @@ def sssp(
     try:
         set_base(state0)
         frontier = state0.localCheckpoint(eager=True)
-        import time as _time
-
         for r in range(1, max_rounds + 1):
-            _t_round = _time.time()
             cand = (
                 frontier.join(e.hint("merge"), frontier["id"] == e["src"])
                 .groupBy("root", F.col("dst").alias("vid"))
@@ -189,20 +186,15 @@ def sssp(
             imp = ctx.truncate(imp, r)
             n_improved = imp.count()  # one driver action per round
             rounds = r
-            _secs = lambda: round(_time.time() - _t_round, 3)  # noqa: E731
             if n_improved == 0:
-                ctx.record(imp, r, {"improved": 0, "seconds": _secs()})
+                ctx.record(imp, r, {"improved": 0})
                 converged = True
                 break
             frontier = imp
             if delta is None and n_improved * 2 > base_rows:
                 # state-sized update: fold straight into a fresh base
                 set_base(full_merge(base, imp))
-                ctx.record(
-                    imp,
-                    r,
-                    {"improved": n_improved, "compacted": True, "seconds": _secs()},
-                )
+                ctx.record(imp, r, {"improved": n_improved, "compacted": True})
             else:
                 # delta is its own checkpoint copy, never an alias of the
                 # ctx-chain frame: ctx unpersists the previous round's imp
@@ -221,19 +213,9 @@ def sssp(
                     set_base(full_merge(base, delta))
                     swap_delta(None)
                     delta_rows = 0
-                    ctx.record(
-                        imp,
-                        r,
-                        {
-                            "improved": n_improved,
-                            "compacted": True,
-                            "seconds": _secs(),
-                        },
-                    )
+                    ctx.record(imp, r, {"improved": n_improved, "compacted": True})
                 else:
-                    ctx.record(
-                        imp, r, {"improved": n_improved, "seconds": _secs()}
-                    )
+                    ctx.record(imp, r, {"improved": n_improved})
         state = base if delta is None else full_merge(base, delta)
         dist_out = state.localCheckpoint(eager=True)
         dist_out.count()

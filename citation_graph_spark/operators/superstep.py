@@ -13,16 +13,45 @@ driver and owns exactly the things Catalyst cannot:
 - **convergence-driven control** — fixpoint tests (L1 delta, changed-label
   count) are driver-side scalars; no Catalyst concept exists for them,
 - **per-iteration metrics** collection.
+
+One protocol, driven by :class:`SuperstepContext` for every operator:
+
+1. ``resume(done)`` — load the newest valid manifest
+   (``CheckpointManager.latest``; the reference validates its cache on
+   load, ``cache_manager.py:239-329``). A manifest written under other
+   args warns and starts fresh; a compatible one is returned with
+   ``done`` set when it already satisfies the operator's stopping rule,
+   so the operator returns it without running a superstep.
+2. ``truncate(state, i)`` — cut lineage; starts step ``i``'s clock.
+3. ``record(state, i, metrics)`` — append the history row, stamping
+   ``seconds`` (wall time since the step's ``truncate``; only history rows
+   carry it, manifests stay timing-free), and durably checkpoint every
+   ``durable_every`` steps.
+4. ``finish(state, i, metrics)`` — durably save the final state; a no-op
+   when no step was recorded since the resume, so a resume with nothing
+   left to run never rewrites the loaded manifest.
 """
 
 from __future__ import annotations
 
+import time
+import warnings
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 
-from citation_graph_spark.sources.checkpoint import CheckpointManager
+from citation_graph_spark.sources.checkpoint import CheckpointManager, resume_compatible
+
+
+class Resumed(NamedTuple):
+    """A compatible checkpoint: its iteration, state, recorded metrics, and
+    whether it already meets the caller's stopping rule."""
+
+    iteration: int
+    state: DataFrame
+    metrics: dict[str, Any]
+    done: bool
 
 
 @dataclass
@@ -38,6 +67,34 @@ class SuperstepContext:
     history: list[dict[str, Any]] = field(default_factory=list)
     _last: DataFrame | None = None
     _pending_unpersist: DataFrame | None = None
+    _step_start: float | None = None
+
+    def resume(
+        self,
+        done: Callable[[int, dict[str, Any]], bool],
+        ignore: tuple[str, ...] = ("max_iter", "tol"),
+    ) -> Resumed | None:
+        """The newest valid checkpoint whose args match this run's (``ignore``
+        names the continuation knobs that may differ), or None to start
+        fresh. ``done(iteration, metrics)`` is the caller's stopping rule
+        applied to the recorded state."""
+        if self.checkpoint is None:
+            return None
+        latest = self.checkpoint.latest()
+        if latest is None:
+            return None
+        iteration, state, manifest = latest
+        if not resume_compatible(manifest.get("args"), self.checkpoint.args, ignore):
+            warnings.warn(
+                f"checkpoint at {self.checkpoint.path} was written with different "
+                f"args ({manifest.get('args')}) than this call "
+                f"({self.checkpoint.args}); ignoring it and starting fresh",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+            return None
+        metrics = manifest.get("metrics") or {}
+        return Resumed(iteration, state, metrics, bool(done(iteration, metrics)))
 
     def truncate(self, state: DataFrame, iteration: int) -> DataFrame:
         """Cut plan lineage via EAGER localCheckpoint.
@@ -59,6 +116,7 @@ class SuperstepContext:
         materializes would lose data. Leaving superseded blocks cached is
         not an option either — block churn degrades iteration time
         severalfold within ~10 supersteps (measured)."""
+        self._step_start = time.perf_counter()
         new_state = state.localCheckpoint(eager=True)
         self._pending_unpersist = self._last
         self._last = new_state
@@ -70,16 +128,21 @@ class SuperstepContext:
         iteration: int,
         metrics: dict[str, Any] | None = None,
     ) -> DataFrame:
-        """Log this iteration's metrics; release the superseded iteration's
-        blocks (the caller has materialized ``state`` by now); durably
-        checkpoint every ``durable_every`` iterations."""
+        """Log this iteration's metrics (plus ``seconds`` since its
+        ``truncate``); release the superseded iteration's blocks (the caller
+        has materialized ``state`` by now); durably checkpoint every
+        ``durable_every`` iterations."""
+        row = {"iteration": iteration, **(metrics or {})}
+        if self._step_start is not None:
+            row["seconds"] = round(time.perf_counter() - self._step_start, 3)
+            self._step_start = None
         if self._pending_unpersist is not None:
             try:
                 self._pending_unpersist.unpersist()
             except Exception:
                 pass
             self._pending_unpersist = None
-        self.history.append({"iteration": iteration, **(metrics or {})})
+        self.history.append(row)
         if (
             self.checkpoint is not None
             and self.durable_every > 0
@@ -89,8 +152,9 @@ class SuperstepContext:
         return state
 
     def finish(self, state: DataFrame, iteration: int, metrics: dict[str, Any] | None = None):
-        """Durably record the converged state (if checkpointing is on)."""
-        if self.checkpoint is not None:
+        """Durably record the final state (if checkpointing is on and a step
+        ran since the resume — otherwise the loaded manifest stays as is)."""
+        if self.checkpoint is not None and self.history:
             return self.checkpoint.save(state, iteration, metrics)
         return state
 

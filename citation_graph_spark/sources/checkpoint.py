@@ -26,7 +26,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 SPEC_VERSION = 2
 # Underscore prefix: Spark's file index skips it when scanning the parquet dir.
@@ -68,6 +68,28 @@ def resume_compatible(
     a = {k: v for k, v in (manifest_args or {}).items() if k not in drop}
     b = {k: v for k, v in (current_args or {}).items() if k not in drop}
     return a == b
+
+
+def hash_sum(*cols: str | Column) -> Column:
+    """Order-independent checksum aggregate: the sum of the rows' xxhash64.
+    Decimal, because a long sum overflows under ANSI mode; 0 (not NULL)
+    over no rows, so it stays valid manifest JSON."""
+    return F.coalesce(
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
+        F.lit(0).cast("decimal(38,0)"),
+    )
+
+
+def id_fingerprint(ids: DataFrame) -> str:
+    """Fingerprint of the set of ``id`` values in ``ids`` (duplicates and
+    order do not matter) — recorded in manifest args, so resuming with a
+    different id set (PPR sources, a BFS exclude list) starts fresh."""
+    return str(
+        ids.select(F.col("id").cast("string").alias("id"))
+        .distinct()
+        .agg(hash_sum("id"))
+        .first()[0]
+    )
 
 
 @dataclass

@@ -4,13 +4,16 @@ resumed from checkpoint, must equal the uninterrupted run exactly."""
 import math
 import os
 import shutil
+from functools import partial
 
 import pytest
 
 from citation_graph_spark import datagen
 from citation_graph_spark.operators.bfs import bfs_expand
 from citation_graph_spark.operators.components import connected_components
-from citation_graph_spark.operators.pagerank import pagerank
+from citation_graph_spark.operators.hits import hits
+from citation_graph_spark.operators.label_propagation import label_propagation
+from citation_graph_spark.operators.pagerank import pagerank, personalized_pagerank
 from citation_graph_spark.sources.checkpoint import CheckpointManager
 from tests.oracles import connected_components_oracle
 
@@ -48,26 +51,6 @@ def test_pagerank_resume_converged_is_instant(spark, tmp_path):
     assert _ranks(again) == _ranks(first)
 
 
-def test_pagerank_resume_rejects_mismatched_args(spark, tmp_path):
-    """A checkpoint written under different hyperparameters must not blend
-    into a new run: different alpha → warn, start fresh, exact fresh result."""
-    edges = datagen.zipf_edges(spark, 120, 700, seed=23).cache()
-    ck = str(tmp_path / "ck_mismatch")
-    pagerank(edges, alpha=0.85, tol=1e-6, checkpoint_dir=ck, durable_every=2)
-
-    fresh = pagerank(edges, alpha=0.5, tol=1e-6)  # no checkpoint: ground truth
-    with pytest.warns(RuntimeWarning, match="different .*args"):
-        resumed = pagerank(edges, alpha=0.5, tol=1e-6, checkpoint_dir=ck, durable_every=2)
-    exp, got = _ranks(fresh), _ranks(resumed)
-    assert set(got) == set(exp)
-    for v in exp:
-        assert math.isclose(got[v], exp[v], abs_tol=1e-12), v
-    # the fresh restart pruned the dead timeline: no stale iterations above
-    # the new run's final durable state
-    mgr = CheckpointManager(spark, ck)
-    assert max(mgr.iterations()) <= resumed.iterations
-
-
 def test_bfs_resume_continues_deeper(spark, tmp_path):
     edges = spark.createDataFrame(
         [(i, i + 1, 1) for i in range(10)] + [(0, 5, 2)], "src long, dst long, pos int"
@@ -88,20 +71,6 @@ def test_bfs_resume_continues_deeper(spark, tmp_path):
     again = bfs_expand(edges, root=0, max_depth=5, checkpoint_dir=ck, durable_every=1)
     assert as_set(again) == as_set(direct)
     assert again.history == []
-
-
-def test_bfs_resume_rejects_other_root(spark, tmp_path):
-    edges = spark.createDataFrame(
-        [(i, i + 1, 1) for i in range(6)], "src long, dst long, pos int"
-    )
-    ck = str(tmp_path / "ck_bfs_root")
-    bfs_expand(edges, root=0, max_depth=3, checkpoint_dir=ck, durable_every=1)
-    fresh = bfs_expand(edges, root=2, max_depth=3)
-    with pytest.warns(RuntimeWarning, match="different .*args"):
-        other = bfs_expand(edges, root=2, max_depth=3, checkpoint_dir=ck, durable_every=1)
-    assert {(x["id"], x["depth"]) for x in other.visited.collect()} == {
-        (x["id"], x["depth"]) for x in fresh.visited.collect()
-    }
 
 
 def test_two_star_matches_hash_min(spark):
@@ -208,3 +177,115 @@ def test_two_star_resume_converged_is_instant(spark, tmp_path):
     assert {r["id"]: r["label"] for r in again.labels.collect()} == {
         r["id"]: r["label"] for r in first.labels.collect()
     }
+
+
+# --- one resume protocol for every checkpointing operator -------------------
+
+
+def _ids(spark, ids):
+    return spark.createDataFrame([(i,) for i in ids], "id bigint")
+
+
+def _labels(res):
+    return {r["id"]: r["label"] for r in res.labels.collect()}
+
+
+# Each runner returns (result, final iteration) for a run checkpointed at ck
+# (ck=None: no checkpoint, the fresh ground truth).
+def _run_pagerank(e, ck, alpha=0.5):
+    r = pagerank(e, alpha=alpha, checkpoint_dir=ck, durable_every=2)
+    return _ranks(r), r.iterations
+
+
+def _run_ppr(e, ck, sources=(1, 3)):
+    srcs = _ids(e.sparkSession, sources)
+    r = personalized_pagerank(e, sources=srcs, checkpoint_dir=ck, durable_every=2)
+    return _ranks(r), r.iterations
+
+
+def _run_hits(e, ck):
+    r = hits(e, tol=1e-6, checkpoint_dir=ck, durable_every=2)
+    return {x["id"]: (x["auth"], x["hub"]) for x in r.scores.collect()}, r.iterations
+
+
+def _run_lpa(e, ck):
+    r = label_propagation(e, checkpoint_dir=ck, durable_every=1)
+    return _labels(r), r.iterations
+
+
+def _run_cc(e, ck, algorithm="hash_min"):
+    r = connected_components(e, algorithm=algorithm, checkpoint_dir=ck, durable_every=1)
+    return _labels(r), r.iterations
+
+
+def _run_bfs(e, ck, root=2, exclude=None):
+    excl = None if exclude is None else _ids(e.sparkSession, exclude)
+    r = bfs_expand(
+        e, root=root, max_depth=3, exclude=excl, checkpoint_dir=ck, durable_every=1
+    )
+    return {x["id"]: (x["depth"], x["parent"]) for x in r.visited.collect()}, r.depth_reached
+
+
+# case -> (writer of a checkpoint under other args, runner under test).
+# HITS, LPA and CC record no args besides the algorithm name and
+# continuation knobs, so another algorithm's checkpoint is their mismatch.
+_MISMATCHED = {
+    "pagerank": (partial(_run_pagerank, alpha=0.85), _run_pagerank),
+    "ppr": (partial(_run_ppr, sources=(0, 2)), _run_ppr),
+    "hits": (_run_pagerank, _run_hits),
+    "lpa": (_run_cc, _run_lpa),
+    "cc_hash_min": (_run_lpa, _run_cc),
+    "cc_two_star": (_run_cc, partial(_run_cc, algorithm="two_star")),
+    "bfs_root": (partial(_run_bfs, root=0), _run_bfs),
+    "bfs_exclude": (
+        partial(_run_bfs, root=0, exclude=(3,)),
+        partial(_run_bfs, root=0, exclude=(4,)),
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def small_graph(spark):
+    edges = datagen.zipf_edges(spark, 120, 700, seed=23).cache()
+    yield edges
+    edges.unpersist()
+
+
+@pytest.mark.parametrize("case", list(_MISMATCHED))
+def test_resume_rejects_mismatched_args(spark, small_graph, tmp_path, case):
+    """A checkpoint written under other args (or by another algorithm) must
+    not blend into a new run: warn, start fresh, give the fresh result, and
+    prune the dead timeline above the new run's final state."""
+    write_other, run = _MISMATCHED[case]
+    ck = str(tmp_path / "ck")
+    expected, _ = run(small_graph, None)
+    write_other(small_graph, ck)
+    with pytest.warns(RuntimeWarning, match="different .*args"):
+        got, final_iteration = run(small_graph, ck)
+    assert set(got) == set(expected)
+    for k in expected:
+        assert got[k] == pytest.approx(expected[k], abs=1e-12), k
+    assert max(CheckpointManager(spark, ck).iterations()) <= final_iteration
+
+
+@pytest.mark.parametrize(
+    "run", [connected_components, label_propagation], ids=["cc_hash_min", "lpa"]
+)
+def test_resume_with_no_step_left_keeps_manifest(spark, tmp_path, run):
+    """A run stopped by max_iter, resumed with the same max_iter, has no
+    superstep left: it returns the recorded state and leaves the manifest
+    (and its recorded metrics) as written."""
+    edges = datagen.cycle_edges(spark, 40)
+    ck = str(tmp_path / "ck_stop")
+    first = run(edges, max_iter=2, checkpoint_dir=ck, durable_every=1)
+    assert not first.converged
+    mgr = CheckpointManager(spark, ck)
+    before = mgr.peek_latest_manifest()
+    again = run(edges, max_iter=2, checkpoint_dir=ck, durable_every=1)
+    assert again.history == []
+    assert again.iterations == first.iterations == 2
+    assert not again.converged
+    after = mgr.peek_latest_manifest()
+    assert after["metrics"] == before["metrics"]
+    assert after["time"] == before["time"]  # not rewritten
+    assert _labels(again) == _labels(first)

@@ -350,10 +350,7 @@ def test_ppr_checkpoint_resume_parity(spark, tmp_path):
         assert math.isclose(full[v], resumed[v], abs_tol=1e-12), v
 
     # different seed set → checkpoint incompatible → fresh run, not a blend
-    import warnings
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", RuntimeWarning)
+    with pytest.warns(RuntimeWarning, match="different .*args"):
         other = _spark_ranks(
             personalized_pagerank(
                 edges,
@@ -367,6 +364,27 @@ def test_ppr_checkpoint_resume_parity(spark, tmp_path):
     exp_other, _ = ppr_oracle(_edge_list(edges), [1, 3], tol=0.0, max_iter=6)
     for v in exp_other:
         assert math.isclose(other[v], exp_other[v], abs_tol=1e-9), v
+
+
+def test_ppr_checkpoint_many_sources(spark, tmp_path):
+    """The sources fingerprint must not overflow under ANSI mode: a long
+    sum of 200 xxhash64 values does. Duplicate ids do not change it."""
+    edges = datagen.zipf_edges(spark, n_vertices=300, n_edges=1500, seed=7).cache()
+    ids = list(range(200))
+    ck = str(tmp_path / "ppr_many")
+    res = personalized_pagerank(
+        edges, sources=_sources_df(spark, ids), tol=1e-6, checkpoint_dir=ck
+    )
+    plain = personalized_pagerank(edges, sources=_sources_df(spark, ids), tol=1e-6)
+    assert res.iterations == plain.iterations
+    got, exp = _spark_ranks(res), _spark_ranks(plain)
+    for v in exp:
+        assert math.isclose(got[v], exp[v], abs_tol=1e-12), v
+    again = personalized_pagerank(
+        edges, sources=_sources_df(spark, ids + ids[:50]), tol=1e-6, checkpoint_dir=ck
+    )
+    assert again.history == []  # same source set: converged checkpoint resumed
+    edges.unpersist()
 
 
 def test_weighted_pagerank_matches_oracle(spark):

@@ -44,21 +44,16 @@ def test_degree_agg_two_phase(spark):
 
 
 def test_superstep_join_reuses_cached_sorted_edges(spark):
+    """The production superstep body (``superstep_contribs``) against the
+    production edge cache (``PreparedGraph.weighted_edges``)."""
+    from citation_graph_spark.operators.prepared import PreparedGraph, superstep_contribs
+
     edges = datagen.zipf_edges(spark, 2_000, 20_000, seed=42)
-    w_edges = (
-        edges.select("src", "dst", F.lit(0.5).alias("w"))
-        .repartition(8, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    prepared = PreparedGraph(edges, 8)
     try:
-        w_edges.count()
+        w_edges = prepared.weighted_edges()
         ranks = spark.range(2_000).select(F.col("id"), F.lit(1e-4).alias("rank"))
-        step = (
-            ranks.join(w_edges.hint("merge"), ranks.id == w_edges.src)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-        )
+        step = superstep_contribs(ranks, w_edges, 0)
         plan = _plan(step, "simple")
         assert "SortMergeJoin" in plan
         assert "InMemoryTableScan" in plan
@@ -70,7 +65,7 @@ def test_superstep_join_reuses_cached_sorted_edges(spark):
         assert join_part.count("Exchange") == 1, plan
         assert join_part.count(" Sort [") == 1, plan
     finally:
-        w_edges.unpersist()
+        prepared.unpersist()
 
 
 def test_partitioned_pages_prune_directories(spark, tmp_path):
